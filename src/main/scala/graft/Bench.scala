@@ -62,34 +62,38 @@ object Bench {
     // round-17 per ADVICE-r16 medium): every stream_* key's graded value
     // is a memoized once-per-(session, corpus) artifact — wave staging +
     // full AvailableNow streaming runs — after which the key itself is a
-    // sub-0.1 s read of the result. The prebuild is now (a) TIMED AND
-    // FOLDED INTO THE HEADLINE TOTAL — the r16 artifact excluded ~36 s of
-    // real streaming work from 'value', which a consumer reading the
-    // headline alone would never see — and (b) CONCURRENT where safe:
-    // the builds are independent streaming queries with their own
-    // checkpoints, so the suite pays the true deployment cost (parallel
-    // wall), not an artificial serialization. The two transformWithState
-    // keys mutate the session-global state-store provider and build
-    // sequentially after the pool drains. Per-key warm times stay in the
-    // queries map; stream_prebuild_sec remains disclosed so a consumer
-    // can split the total into build + per-key read. A failed pre-build
-    // stays that key's own timed failure to report.
+    // sub-0.1 s read of the result. The prebuild is (a) TIMED AND FOLDED
+    // INTO THE HEADLINE TOTAL — the r16 artifact excluded ~36 s of real
+    // streaming work from 'value', which a consumer reading the headline
+    // alone would never see — and (b) CONCURRENT: the builds are
+    // independent streaming queries with their own checkpoints, each in
+    // its own child session (Streaming.inStreamSession), so none of them
+    // writes the shared session's conf and all 14 can share one pool.
+    // Per-key warm times stay in the queries map; stream_prebuild_sec
+    // remains disclosed so a consumer can split the total into build +
+    // per-key read. A failed pre-build stays that key's own timed
+    // failure to report.
     // Bounded await per key against a SHARED deadline (round-18,
     // ADVICE-r17: Duration.Inf meant one wedged state store hung the
-    // whole bench with no timeout, no partial artifact, and no name —
-    // the old sequential build at least identified the hung key by
-    // position). The deadline is generous (30 min default, env-
-    // overridable for huge SFs — the sf5 cold build is ~4 min total);
-    // a key still running at the deadline is logged BY NAME, marked
-    // not-prebuilt, and the suite proceeds — its timed read then pays
-    // (and reports) the real cost or failure itself.
+    // whole bench with no timeout, no partial artifact, and no name).
+    // The deadline is generous (30 min default, env-overridable for huge
+    // SFs — the sf5 cold build is ~4 min total); a key still running at
+    // the deadline is logged BY NAME, its jobs are cancelled through its
+    // job tag, it is marked not-prebuilt, and the suite proceeds — its
+    // timed read then pays (and reports) the real cost or failure itself.
     val prebuildDeadlineSec = sys.env.getOrElse(
       "SPARK_GRAFT_PREBUILD_TIMEOUT_SEC", "1800").toInt
     val prebuildDeadline = System.nanoTime() +
       prebuildDeadlineSec * 1000L * 1000L * 1000L
-    def prebuildOne(name: String): Option[String] =
+    // Job tags are thread-local, so each pool thread tags only its own
+    // key's jobs, and a timed-out key's jobs can be cancelled by tag.
+    def prebuildTag(name: String) = s"graft:prebuild:$name"
+    def prebuildOne(name: String): Option[String] = {
+      spark.sparkContext.addJobTag(prebuildTag(name))
       try { SparkEntry.queries(name)(spark, sfDir).count(); Some(name) }
       catch { case scala.util.control.NonFatal(_) => None }
+      finally spark.sparkContext.removeJobTag(prebuildTag(name))
+    }
     // Run a key set on an n-thread pool against the shared deadline.
     def runPrebuildPhase(keys: Seq[String], threads: Int): Seq[String] = {
       import scala.concurrent.{Await, ExecutionContext, Future}
@@ -104,14 +108,14 @@ object Bench {
         try Await.result(f, left.millis)
         catch { case _: java.util.concurrent.TimeoutException =>
           System.err.println(
-            s"[graft] WARN: prebuild still running at deadline: $k"); None }
+            s"[graft] WARN: prebuild still running at deadline, cancelling: $k")
+          spark.sparkContext.cancelJobsWithTag(prebuildTag(k))
+          None }
       } finally pool.shutdown()
     }
     // Pool width scales with the worker count (guide §2.6 "overlap
     // independent jobs"). Round-19 re-measured the width with the batch
-    // track running concurrently: cores/2 beats r18's cores/4 — at 32
-    // cores the 12 pool keys then launch in ONE wave (span bounded by
-    // the slowest build + the provider phase) instead of two, and the
+    // track running concurrently: cores/2 beats r18's cores/4 — the
     // streaming builds are latency-bound (commit-log tails), not
     // CPU-bound, so the extra in-flight queries don't oversubscribe.
     // Back-to-back steal-0 records: width 8 → stream span 20.2 s /
@@ -119,8 +123,6 @@ object Bench {
     val poolThreads = sys.env.get("SPARK_GRAFT_STREAM_PREBUILD_THREADS")
       .map(_.toInt).getOrElse(math.max(2, cpus.toInt / 2))
     val streamKeys = SparkEntry.queries.keys.filter(_.startsWith("stream_")).toSeq
-    val (provKeys, poolKeys) = streamKeys.partition(
-      graft.queries.Streaming.providerMutatingKeys.contains)
     // Batch memo pre-build (round-19; guide §2.6 "overlap independent
     // jobs" — the same judged pattern as the streaming prebuild above,
     // extended to the BATCH keys whose graded value is likewise a
@@ -155,9 +157,9 @@ object Bench {
       "vec_int8_dot_topk", "vec_kmeans_step", "vec_semantic_dedup",
       "vec_ood_centroid", "minhash_lsh_jaccard", "vec_pq_quantize",
       "vec_pq_adc_topk", "vec_ivf_pq_rerank", "vec_dup_clusters",
-      // ML prep artifact fits (bpeVocabEncoded, MLlib model, batch plan)
+      // ML prep artifact fits (bpeVocabEncoded, MLlib model)
       "ml_dataset_card", "ml_pipeline_mllib", "ml_bpe_encode",
-      "ml_shuffle_batch", "ml_tokenizer_fertility", "ml_bpe_vocab",
+      "ml_tokenizer_fertility", "ml_bpe_vocab",
       // text corpus-statistics + signature/edge memos
       "text_dedup_cc", "text_containment_pairs", "text_substring_dedup",
       "text_tfidf", "text_simhash_band_pairs", "text_token_drift",
@@ -172,11 +174,12 @@ object Bench {
       // zorder 64-dir write memo; variant keys are docToks' first readers
       "fn_zorder_files", "fn_variant_extract", "fn_variant_explode",
       "fn_variant_nested")
-    // The stream and batch prebuild tracks are mutually independent —
-    // batch keys never start a streaming query, so the RocksDB
-    // provider-mutation constraint (stream phase B must not overlap
-    // stream phase A's query STARTS) does not extend to them — and each
-    // track under-fills the executor on its own (streaming builds idle
+    // a renamed or removed key must fail the run, not drop out silently
+    val undeclared = memoBackedBatchKeys.filterNot(SparkEntry.queries.contains)
+    require(undeclared.isEmpty,
+      s"memoBackedBatchKeys names undeclared keys: ${undeclared.mkString(", ")}")
+    // The stream and batch prebuild tracks are mutually independent and
+    // each under-fills the executor on its own (streaming builds idle
     // through commit-log tails; batch builds idle through single-task
     // stage scheduling). Run the two tracks CONCURRENTLY and fold only
     // the combined wall into the headline: prebuild_sec below is the
@@ -194,13 +197,7 @@ object Bench {
         ExecutionContext.fromExecutor(trackPool)
       val streamF = Future {
         val t0 = System.nanoTime()
-        // Phase B: the two RocksDB provider-mutating builds OVERLAP each
-        // other (both route through Streaming.withRocksProvider, which is
-        // depth-counted — see its scaladoc); they still must not overlap
-        // phase A, whose query starts would otherwise read the RocksDB
-        // provider. Measured sf0.1: 7.4 s sequential → ~4.5 s overlapped.
-        val r = runPrebuildPhase(poolKeys, poolThreads) ++
-          runPrebuildPhase(provKeys, provKeys.size)
+        val r = runPrebuildPhase(streamKeys, poolThreads)
         streamPrebuildSec = (System.nanoTime() - t0) / 1e9
         r
       }
@@ -214,9 +211,7 @@ object Bench {
           .map(_.toInt).getOrElse(math.max(2, cpus.toInt / 2))
         val r =
           if (sys.env.get("SPARK_GRAFT_BATCH_PREBUILD").contains("0")) Nil
-          else runPrebuildPhase(
-            memoBackedBatchKeys.filter(SparkEntry.queries.contains),
-            batchThreads)
+          else runPrebuildPhase(memoBackedBatchKeys, batchThreads)
         batchPrebuildSec = (System.nanoTime() - t0) / 1e9
         r
       }
@@ -421,7 +416,7 @@ object Bench {
     // INCLUDES the streaming prebuild (ADVICE-r16 medium): the memoized
     // streaming builds are real suite work; excluding them made 'value'
     // alone understate the suite by ~36 s. queries still holds the warm
-    // per-key reads; total − stream_prebuild_sec recovers the old number.
+    // per-key reads; total − prebuild_sec recovers their sum.
     val valid = failed.isEmpty
     // prebuildSec is the COMBINED wall of the concurrent stream+batch
     // prebuild region — the true elapsed suite cost; the per-track spans

@@ -83,60 +83,45 @@ object Graft {
     * streaming key pays ~5 s of engine JIT that the per-key warm cost —
     * 0.06 s — shows is pure bring-up, not query work) and lands on
     * whichever stream key runs first. Touches NO fixture data: the
-    * two-row source is synthesized here. */
+    * two-row source is synthesized here. Runs in a 2-partition child
+    * session (Streaming.inStreamSession), like every streaming build, so
+    * the caller's conf is never written. */
   def streamingBringUp(spark: SparkSession): Unit = {
     import org.apache.spark.sql.functions._
-    import org.apache.spark.sql.streaming.Trigger
-    val prev = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", "2")
-    var baseDir: java.io.File = null
-    try {
-      // through the family tempDir: pid-stamped name + reaper-registered,
-      // so a SIGKILL between here and the finally below still gets
-      // reclaimed by the next JVM's startup sweep (round-17)
-      val base = {
-        val p = graft.queries.Streaming.tempDir("graft_stream_warm_")
-        baseDir = new java.io.File(p)
-        p
-      }
-      spark.range(2)
+    import graft.queries.Streaming
+    // through the family tempDir: pid-stamped name + reaper-registered,
+    // so a SIGKILL between here and the finally below still gets
+    // reclaimed by the next JVM's startup sweep (round-17)
+    val base = Streaming.tempDir("graft_stream_warm_")
+    try Streaming.inStreamSession(spark, partitions = 2) { s =>
+      s.range(2)
         .select(col("id"),
           expr("timestamp_micros(cast(id * 60000000 as long))").as("ts"),
           (col("id") % 2).cast("string").as("k"))
         .coalesce(1).write.parquet(s"$base/src")
-      val schema = spark.read.parquet(s"$base/src").schema
-      def src = spark.readStream.schema(schema).parquet(s"$base/src")
+      val schema = s.read.parquet(s"$base/src").schema
+      def src = s.readStream.schema(schema).parquet(s"$base/src")
         .withColumn("ts", col("ts").cast("timestamp"))
         .withWatermark("ts", "1 minute")
       // stateful windowed agg → parquet sink (the file/tumbling shape)
-      val q1 = src.groupBy(window(col("ts"), "1 minute"), col("k"))
+      Streaming.runToEnd(src.groupBy(window(col("ts"), "1 minute"), col("k"))
         .agg(count(lit(1)).as("n"))
-        .select(col("window.start").as("b"), col("k"), col("n"))
-        .writeStream.format("parquet").option("path", s"$base/out1")
-        .option("checkpointLocation", s"$base/ck1")
-        .outputMode("append").trigger(Trigger.AvailableNow()).start()
-      q1.awaitTermination()
+        .select(col("window.start").as("b"), col("k"), col("n")), s"$base/q1")
       // stream-stream interval self-join → parquet sink (the join shape)
       val l = src.select(col("id").as("lid"), col("k").as("lk"),
         col("ts").as("lts")).withWatermark("lts", "1 minute")
       val r = src.select(col("id").as("rid"), col("k").as("rk"),
         col("ts").as("rts")).withWatermark("rts", "1 minute")
-      val q2 = l.join(r, col("lk") === col("rk") &&
+      Streaming.runToEnd(l.join(r, col("lk") === col("rk") &&
           col("rts") >= col("lts") &&
           col("rts") <= col("lts") + expr("INTERVAL 2 MINUTES"), "inner")
-        .select(col("lid"), col("rid"))
-        .writeStream.format("parquet").option("path", s"$base/out2")
-        .option("checkpointLocation", s"$base/ck2")
-        .outputMode("append").trigger(Trigger.AvailableNow()).start()
-      q2.awaitTermination()
+        .select(col("lid"), col("rid")), s"$base/q2")
       // session-window stateful merge → parquet sink (the session shape)
-      val q3 = src.groupBy(session_window(col("ts"), "1 minute"), col("k"))
-        .agg(count(lit(1)).as("n"))
-        .select(col("session_window.start").as("s"), col("k"), col("n"))
-        .writeStream.format("parquet").option("path", s"$base/out3")
-        .option("checkpointLocation", s"$base/ck3")
-        .outputMode("append").trigger(Trigger.AvailableNow()).start()
-      q3.awaitTermination()
+      Streaming.runToEnd(
+        src.groupBy(session_window(col("ts"), "1 minute"), col("k"))
+          .agg(count(lit(1)).as("n"))
+          .select(col("session_window.start").as("s"), col("k"), col("n")),
+        s"$base/q3")
     } catch {
       // ADVICE-r14: a silently-broken warmup re-exposes the ~5 s streaming
       // cold-start it exists to hide — make the failure visible (warm-up
@@ -145,14 +130,9 @@ object Graft {
         System.err.println(
           s"[graft] WARN: streaming bring-up failed (first stream query pays cold-start): $e")
     } finally {
-      spark.conf.set("spark.sql.shuffle.partitions", prev)
       // the warmup's sinks/checkpoints are throwaway — reclaim them instead
       // of leaking three parquet dirs per Bench run under /tmp (ADVICE-r14)
-      def rm(f: java.io.File): Unit = {
-        Option(f.listFiles()).toSeq.flatten.foreach(rm)
-        f.delete(); ()
-      }
-      if (baseDir != null) rm(baseDir)
+      Streaming.rmTree(new java.io.File(base))
     }
   }
 

@@ -19,11 +19,12 @@ while [ "$(date +%s)" -lt "$END" ]; do
   echo "$(date +%T) dress-gate steal=${D}j/60s load=$L" >&2
   if [ "$D" -lt 120 ] && [ "$OK" = "1" ]; then
     # sbt prefixes stdout with '[info] ' — extract the JSON object rather
-    # than anchoring on '^{' (the r16/r17 0-byte-dress lesson).
+    # than anchoring on '^{' (the r16/r17 0-byte-dress lesson); Bench
+    # prints two such lines, and the dress file keeps the first, full one.
     SPARK_GRAFT_BENCH_REPS=1 SPARK_GRAFT_SF_DIR=/root/testdata/sf0.1 \
       SPARK_GRAFT_CPUS=32 \
       sbt "runMain graft.Bench" 2>/dev/null | grep -o '{"metric".*}' \
-      > tools/bench_r19_sbt_dress.json
+      | head -1 > tools/bench_r19_sbt_dress.json
     if [ -s tools/bench_r19_sbt_dress.json ]; then
       echo "dress recorded $(date +%T)" >&2; break
     fi
